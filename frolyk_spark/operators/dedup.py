@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from frolyk_spark.functions.hashing import portable_hash_expr, portable_hash_spark_sql, portable_hash_sql
 from frolyk_spark.functions.portable import round4 as _round4
-from frolyk_spark.sources.catalog import load_table
+from frolyk_spark.sources.catalog import load_table, read_parquet
 
 #: words per shingle for minhash / jaccard
 SHINGLE_W = 3
@@ -169,6 +169,12 @@ def _minhash_signature_path(sf_dir: str) -> str:
     return os.path.join(SCRATCH, "signatures", f"minhash_{key}.parquet")
 
 
+#: schema of the persisted signature artifact: doc_id, then one slot per hash
+_SIGNATURES_DDL = ", ".join(
+    ["doc_id BIGINT"] + [f"s{j} BIGINT" for j in range(MINHASH_K)]
+)
+
+
 def persisted_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signature table persisted to parquet once per source dataset and
     reread on later calls — the incremental-corpus shape a real pipeline
@@ -179,7 +185,7 @@ def persisted_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _minhash_signature_path(sf_dir)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         minhash_signatures(spark, sf_dir).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out, schema=_SIGNATURES_DDL)
 
 
 def _band_hashes_for(sigs: DataFrame, b_cnt: int) -> DataFrame:
@@ -889,9 +895,14 @@ def min_label_propagation(
     broadcast-or-shuffle of the edge side), and the label state keeps
     hash(doc_id) through every checkpoint (distinct partitions it; the
     per-round cut preserves it) — each round runs exactly ONE exchange,
-    the neighbor-min aggregate transport, at any scale."""
+    the neighbor-min aggregate transport, at any scale.
+
+    ``max_iters >= 1``: round 1's fixpoint count is the action that
+    materializes the lazy edge cut inside the fixed-plan confs."""
     from frolyk_spark.functions.loops import fixed_plan_loop
 
+    if max_iters < 1:
+        raise ValueError(f"max_iters must be >= 1, got {max_iters}")
     spark = pairs.sparkSession
     with fixed_plan_loop(spark, big_bytes=big_bytes) as nparts:
         if symmetric:

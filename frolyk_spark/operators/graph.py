@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from frolyk_spark.functions.lineage import cut_lineage
-from frolyk_spark.sources.catalog import load_table
+from frolyk_spark.sources.catalog import load_table, read_parquet
 
 #: total rank mass, in integer "mass units" (1e12 ⇒ per-node shares stay
 #: comfortably inside BIGINT: 85 * 1e12 < 2^63 by five orders of magnitude)
@@ -122,6 +122,11 @@ def _copurchase_path(sf_dir: str, *, weighted: bool = False) -> str:
     return os.path.join(SCRATCH, "graphs", f"{prefix}_{key}.parquet")
 
 
+#: schemas of the persisted co-purchase artifacts
+_COPURCHASE_DDL = "src BIGINT, dst BIGINT"
+_COPURCHASE_W_DDL = "src BIGINT, dst BIGINT, w BIGINT"
+
+
 def persisted_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The co-purchase graph persisted once per source dataset under
     source-keyed scratch (the E4 persisted-state pattern, like the minhash
@@ -135,7 +140,7 @@ def persisted_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         copurchase_edges_frame(
             load_table(spark, sf_dir, "lineitem")
         ).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out, schema=_COPURCHASE_DDL)
 
 
 def pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -777,11 +782,15 @@ def graph_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     All BIGINT end to end ⇒ bit-exact mirror oracle. Overflow bound:
     exact while m·(max deg)² < 2^63 and n·(max strength)² < 2^63 —
     beyond ~10^6-degree hubs on 10^12-edge graphs these sums need
-    bucketing, noted here rather than silently wrapped. Shuffles: one
-    degree count + one strength sum over the persisted edge tables
-    (E4), two bounded bucket groupBys, one edge scan joining the
-    (lineage-cut, thrice-consumed) degree table on both endpoints —
-    un-hinted, AQE broadcasts while small (CLAUDE.md model-table rule).
+    bucketing, noted here rather than silently wrapped. Shuffles: ONE
+    fused aggregate over the persisted WEIGHTED edge table (E4) builds a
+    single lineage-cut (part, deg, s) checkpoint, two bounded bucket
+    groupBys read it, and one scan of the unweighted edge table joins it
+    on both endpoints — un-hinted, AQE broadcasts while small (CLAUDE.md
+    model-table rule). Because deg and s both come off the weighted
+    table, the first call builds the weighted artifact
+    (persisted_copurchase_weighted) even where only the unweighted one
+    was persisted before.
     log2 buckets via the bin-string bit-width trick
     (length(bin(x))-1), never libm.
     """
@@ -928,7 +937,7 @@ def persisted_copurchase_weighted(spark: SparkSession, sf_dir: str) -> DataFrame
             ),
             carry=("w",),
         ).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out, schema=_COPURCHASE_W_DDL)
 
 
 def pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:

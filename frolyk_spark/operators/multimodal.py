@@ -24,7 +24,7 @@ from frolyk_spark.functions.hashing import (
     portable_hash_expr, portable_hash_py, portable_hash_sql,
 )
 from frolyk_spark.functions.lineage import cut_lineage
-from frolyk_spark.sources.catalog import load_table
+from frolyk_spark.sources.catalog import load_table, read_parquet
 
 MODALITIES = ("image", "audio", "video")
 
@@ -778,6 +778,10 @@ def _dhash_path(sf_dir: str) -> str:
     return _os.path.join(SCRATCH, "signatures", f"dhash_{key}.parquet")
 
 
+#: schema of the persisted code table
+_DHASH_CODES_DDL = "doc_id BIGINT, dhash BIGINT"
+
+
 def persisted_dhash_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The perceptual code table persisted once per source dataset and
     reread on later calls — the E4 shape (persisted_minhash_signatures)
@@ -791,7 +795,7 @@ def persisted_dhash_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _dhash_path(sf_dir)
     if not _os.path.exists(_os.path.join(out, "_SUCCESS")):
         _dhash_codes(spark, sf_dir).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out, schema=_DHASH_CODES_DDL)
 
 
 def _hamming_pairs(codes: DataFrame, col: str) -> DataFrame:

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from frolyk_spark.functions.portable import (
     round2, round2_sql, round4, round4_sql, round6, round6_sql,
 )
-from frolyk_spark.sources.catalog import load_table
+from frolyk_spark.sources.catalog import load_table, read_parquet
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2595,6 +2595,13 @@ GROUP BY r_b, f_b, m_b
 MV_CUTOFF = "1998-06-01"
 
 
+#: schema of the persisted MV state: _mv_partials' output
+_MV_STATE_DDL = (
+    "l_returnflag STRING, l_linestatus STRING, n BIGINT, qty_c BIGINT, "
+    "price_c BIGINT"
+)
+
+
 def _mv_partials(li: DataFrame) -> DataFrame:
     """Per-(returnflag, linestatus) partial aggregate in exact integer
     sufficient statistics (cents-scaled BIGINT sums + count) — the state a
@@ -2648,7 +2655,7 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(os.path.join(state_dir, "_SUCCESS")):
         base = _mv_partials(li.filter(F.col("l_shipdate") < cutoff))
         base.write.mode("overwrite").parquet(state_dir)
-    state = spark.read.parquet(state_dir)
+    state = read_parquet(spark, state_dir, schema=_MV_STATE_DDL)
     delta = _mv_partials(li.filter(F.col("l_shipdate") >= cutoff))
     merged = (
         state.unionByName(delta)

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from frolyk_spark.functions.hashing import portable_hash_spark_sql, portable_hash_sql
 from frolyk_spark.functions.portable import round4, round4_sql, round6, round6_sql
-from frolyk_spark.sources.catalog import load_table
+from frolyk_spark.sources.catalog import load_table, read_parquet
 
 #: vocabulary entries kept (top-K by term frequency, word tie-break)
 VOCAB_K = 200
@@ -482,6 +482,10 @@ def _bpe_loop(toks: DataFrame) -> tuple[list[tuple[int, str, str, str, int]], Da
     return merges, toks
 
 
+#: schema of the persisted merge table: one row per learned merge
+_BPE_MERGES_DDL = "step INT, left STRING, right STRING, merged STRING, cnt BIGINT"
+
+
 def persisted_bpe_merges(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, str, str, str, int]]:
@@ -524,9 +528,9 @@ def persisted_bpe_merges(
         merges, _ = _bpe_loop(toks)
         spark.createDataFrame(
             merges,
-            "step int, left string, right string, merged string, cnt bigint",
+            _BPE_MERGES_DDL,
         ).coalesce(1).write.mode("overwrite").parquet(out)
-    rows = spark.read.parquet(out).orderBy("step").collect()
+    rows = read_parquet(spark, out, schema=_BPE_MERGES_DDL).orderBy("step").collect()
     return [(r.step, r.left, r.right, r.merged, r.cnt) for r in rows]
 
 

@@ -53,6 +53,10 @@ def get_spark(app_name: str = "frolyk_spark", shuffle_partitions: int | None = N
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
+        # load_table("events") sets this on any session; starting with it
+        # keeps schemas inferred before the first events read valid
+        # (the conf is part of catalog.read_parquet's cache key)
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")

@@ -10,6 +10,9 @@ from __future__ import annotations
 
 import os
 import re
+import stat
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,14 +67,87 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     )
 
 
+#: session confs that change what parquet schema inference returns; their
+#: values are part of every schema-cache key
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+#: inferred schemas kept, least recently used evicted first
+_SCHEMA_CACHE_SIZE = 64
+_schema_cache: OrderedDict = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def _file_stamps(path: str) -> tuple | None:
+    """``(path, size, mtime_ns)`` of a file, or of every file under a
+    directory; None when ``path`` cannot be ``os.stat``-ed (object-store
+    URIs, globs, missing paths)."""
+    try:
+        st = os.stat(path)
+    except (OSError, ValueError):
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return ((path, st.st_size, st.st_mtime_ns),)
+    stamps = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            fp = os.path.join(root, f)
+            try:
+                fst = os.stat(fp)
+            except OSError:
+                return None
+            stamps.append((fp, fst.st_size, fst.st_mtime_ns))
+    return (path, *sorted(stamps))
+
+
+def read_parquet(spark: SparkSession, *paths: str, schema=None) -> DataFrame:
+    """Every parquet read in the library goes through here (read_evolved
+    aside: it must merge every footer), so that no read launches Spark's
+    schema-inference job (one task reading a footer, about 0.1 s of
+    scheduling at small scale) for a schema the program already knows.
+
+    - ``schema`` given (a DDL string or StructType): data the program
+      wrote itself, read with its declared schema.
+    - no schema: external input. The first read infers; the schema is
+      cached in-process, keyed on every file's ``(size, mtime_ns)`` and
+      the session confs in ``_INFER_CONFS``, so a rewritten file or a
+      flipped conf infers again.
+    - a path that cannot be ``os.stat``-ed (object store, glob, missing):
+      plain ``spark.read.parquet``, so errors stay Spark's own.
+    """
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    stamps = [_file_stamps(p) for p in paths]
+    if any(s is None for s in stamps):
+        return spark.read.parquet(*paths)
+    key = (tuple(stamps), tuple(spark.conf.get(c) for c in _INFER_CONFS))
+    with _schema_lock:
+        cached = _schema_cache.get(key)
+        if cached is not None:
+            _schema_cache.move_to_end(key)
+    if cached is not None:
+        return spark.read.schema(cached).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    with _schema_lock:
+        _schema_cache[key] = df.schema
+        while len(_schema_cache) > _SCHEMA_CACHE_SIZE:
+            _schema_cache.popitem(last=False)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_events_ts(spark.read.parquet(path))
-    return spark.read.parquet(path)
+        return normalize_events_ts(read_parquet(spark, path))
+    return read_parquet(spark, path)
 
 
 def write_bucketed(
@@ -122,7 +198,7 @@ def write_partitioned(
     one directory per value, so partition by date/category, bucket by key.
     """
     df.write.partitionBy(*partition_cols).mode(mode).parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return read_parquet(df.sparkSession, path)
 
 
 def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) -> DataFrame:
@@ -143,7 +219,7 @@ def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) ->
         df.write.partitionBy(*partition_cols).mode("overwrite").parquet(path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def write_compacted(
@@ -171,7 +247,7 @@ def write_compacted(
     # per-partition-directory anyway.
     n_files = max(1, min(-(-est // target_file_bytes), 1 << 20))
     df.repartition(n_files).write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return read_parquet(df.sparkSession, path, schema=df.schema)
 
 
 def write_training_shards(
@@ -197,7 +273,7 @@ def write_training_shards(
     out.repartition("shard_id").write.partitionBy("shard_id").mode(
         "overwrite"
     ).parquet(path)
-    return packed.sparkSession.read.parquet(path)
+    return read_parquet(packed.sparkSession, path)
 
 
 #: bits per dimension in the z-value (16 bits x 2 dims = 32-bit z)
@@ -275,7 +351,7 @@ def write_zordered(
         .write.mode("overwrite")
         .parquet(path)
     )
-    return df.sparkSession.read.parquet(path)
+    return read_parquet(df.sparkSession, path, schema=df.schema)
 
 
 def collect_file_stats(
@@ -293,7 +369,7 @@ def collect_file_stats(
     combinable. File count is bounded by the layout (thousands), so the
     result is a small frame a planner can broadcast.
     """
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c in cols:
         aggs.append(F.min(c).alias(f"min_{c}"))
@@ -342,9 +418,9 @@ def read_pruned(
         ).collect()
     ]
     if not keep:
-        return spark.read.parquet(path).where(F.lit(False)), []
+        return read_parquet(spark, path).where(F.lit(False)), []
     return (
-        spark.read.parquet(*keep).where(F.col(col).between(lo, hi)),
+        read_parquet(spark, *keep).where(F.col(col).between(lo, hi)),
         keep,
     )
 
@@ -417,7 +493,7 @@ def collect_file_bloom(spark: SparkSession, path: str, col: str) -> DataFrame:
     (see _bloom_render) — validated HERE at build time (r13 advice: the
     probe-side TypeError alone fired far from the misconfiguration,
     after a useless index was already built and stored)."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     dtype = dict(df.dtypes).get(col)
     if dtype is None:
         raise ValueError(f"Bloom index column {col!r} not found in {path}")
@@ -463,9 +539,9 @@ def read_bloom_pruned(
         if need <= set(r["bits"])
     ]
     if not keep:
-        return spark.read.parquet(path).where(F.lit(False)), []
+        return read_parquet(spark, path).where(F.lit(False)), []
     return (
-        spark.read.parquet(*keep).where(F.col(col) == F.lit(value)),
+        read_parquet(spark, *keep).where(F.col(col) == F.lit(value)),
         keep,
     )
 
@@ -546,7 +622,7 @@ def merge_upsert(
             "upstream ordering decision) before merging"
         )
     touched = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    base = spark.read.parquet(path).where(F.col(partition_col).isin(touched))
+    base = read_parquet(spark, path).where(F.col(partition_col).isin(touched))
     merged = base.join(
         updates.select(key).distinct(), key, "left_anti"
     ).unionByName(updates.select(*base.columns))
@@ -665,11 +741,12 @@ def committed_txns(path: str) -> dict[str, int]:
 
 
 def read_versioned(
-    spark: SparkSession, path: str, version: int | None = None
+    spark: SparkSession, path: str, version: int | None = None, *, schema=None
 ) -> DataFrame:
     """Read snapshot ``version`` (default: latest) — exactly the files its
     manifest lists, so concurrent commits and orphaned staging files are
-    invisible (time travel is just naming an older manifest)."""
+    invisible (time travel is just naming an older manifest). A writer
+    that knows its table's schema passes it (see read_parquet)."""
     import json
 
     versions = _list_versions(path)
@@ -681,7 +758,9 @@ def read_versioned(
         raise FileNotFoundError(f"version {version} not in {versions}")
     with open(os.path.join(_manifest_dir(path), f"v{version}.json")) as f:
         manifest = json.load(f)
-    return spark.read.parquet(*[os.path.join(path, p) for p in manifest["files"]])
+    return read_parquet(
+        spark, *[os.path.join(path, p) for p in manifest["files"]], schema=schema
+    )
 
 
 def read_changes(
@@ -927,6 +1006,8 @@ def export_table(
 #: sidecar directory for delete vectors — underscore-prefixed, so Spark's
 #: file listing treats it as hidden and the base parquet read never sees it
 DELETES_DIR = "_deletes"
+#: schema of one delete-vector directory: (file, row position) tombstones
+_DV_DDL = "_file STRING, _pos BIGINT"
 
 
 def delete_where(spark: SparkSession, path: str, condition: str) -> int:
@@ -961,7 +1042,7 @@ def delete_where(spark: SparkSession, path: str, condition: str) -> int:
     # the file-source relation); composition with earlier deletes is the
     # anti-join below, not a re-scan of the logical view
     matched = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .select(
             F.col("_metadata.file_path").alias("_file"),
             F.col("_metadata.row_index").alias("_pos"),
@@ -1012,7 +1093,7 @@ def delete_where(spark: SparkSession, path: str, condition: str) -> int:
             # GDPR-adjacent artifact) — failed builds clean up after
             # themselves instead of waiting for a purge
             _shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(out).count()
+    return read_parquet(spark, out, schema=_DV_DDL).count()
 
 
 def _delete_vectors(spark: SparkSession, path: str) -> DataFrame | None:
@@ -1025,7 +1106,7 @@ def _delete_vectors(spark: SparkSession, path: str) -> DataFrame | None:
     )
     if not dirs:
         return None
-    return spark.read.parquet(*dirs).select("_file", "_pos")
+    return read_parquet(spark, *dirs, schema=_DV_DDL)
 
 
 def read_with_deletes(spark: SparkSession, path: str) -> DataFrame:
@@ -1035,7 +1116,7 @@ def read_with_deletes(spark: SparkSession, path: str) -> DataFrame:
     referencing files that no longer exist (purged, or rewritten under a
     new name) anti-join against nothing — a harmless no-op, which is
     what makes purge crash-safe."""
-    base = spark.read.parquet(path)
+    base = read_parquet(spark, path)
     tomb = _delete_vectors(spark, path)
     if tomb is None:
         return base
@@ -1128,7 +1209,7 @@ def purge_deletes(
             F.expr("regexp_replace(_file, '/[^/]*$', '')").alias("_dir")
         ).distinct()
         masked_with_dir = (
-            spark.read.parquet(path)
+            read_parquet(spark, path)
             .select(
                 F.col("_metadata.file_path").alias("_file"),
                 F.col("_metadata.row_index").alias("_pos"),

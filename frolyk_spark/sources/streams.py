@@ -176,10 +176,10 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming view of the events table, normalized through the SAME
     helper as the batch catalog (catalog.normalize_events_ts) so streaming
     results hash-match batch oracles by construction."""
-    from frolyk_spark.sources.catalog import normalize_events_ts
+    from frolyk_spark.sources.catalog import normalize_events_ts, read_parquet
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     stream = file_stream(spark, stage_stream_dir(sf_dir, "events"), raw_schema)
     return normalize_events_ts(stream)
 

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from frolyk_spark.operators.dedup import _dedup_incremental_sql
 from frolyk_spark.operators.graph import ORACLES as _graph_oracles
-from frolyk_spark.sources.catalog import load_table
+from frolyk_spark.sources.catalog import load_table, read_parquet
 from frolyk_spark.sources.streams import SCRATCH, events_stream, stage_stream_dir  # noqa: F401
 
 #: session gap for session windows
@@ -409,7 +409,8 @@ def run_available_now(
     if not paths:
         # no batch fired (empty source): preserve the output schema
         return spark.createDataFrame([], df.schema)
-    return spark.read.parquet(*paths)
+    # every batch dir holds df's rows, so df's schema is the read schema
+    return read_parquet(spark, *paths, schema=df.schema)
 
 
 # --- B1: tumbling-window aggregate ------------------------------------------
@@ -1334,6 +1335,13 @@ def stream_session_ttl_proc(
 
 # --- B19: streaming CDC changelog apply (versioned upsert state) --------------
 
+#: schema of a CDC state version: _cdc_reduce's output, kept by _cdc_merge
+_CDC_STATE_DDL = (
+    "user_id BIGINT, n_events BIGINT, k STRING, last_ts_us BIGINT, "
+    "last_type STRING, last_value DOUBLE"
+)
+
+
 def _cdc_reduce(batch_df: DataFrame) -> DataFrame:
     """One row per key from a changelog batch: count + the batch's latest
     payload under the portable ordered key (kept as column ``k`` so merges
@@ -1372,16 +1380,42 @@ def _cdc_merge(prior: DataFrame, batch: DataFrame) -> DataFrame:
     )
 
 
+def _state_versions(root: str) -> list[int]:
+    """Committed ``s{batch_id}`` state versions under ``root``, ascending."""
+    return sorted(
+        int(d[1:])
+        for d in (os.listdir(root) if os.path.isdir(root) else [])
+        if d.startswith("s") and d[1:].isdigit()
+    )
+
+
 def _latest_version_below(root: str, batch_id: int) -> int | None:
     """Latest committed state version STRICTLY below ``batch_id`` — a
     redelivered batch must rebuild from its own predecessor, never merge
     against its own (or a successor's) output, or retries double-count."""
-    versions = [
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit() and int(d[1:]) < batch_id
-    ]
-    return max(versions) if versions else None
+    versions = [v for v in _state_versions(root) if v < batch_id]
+    return versions[-1] if versions else None
+
+
+def _read_state(spark: SparkSession, root: str, version: int, ddl: str) -> DataFrame:
+    """State version ``s{version}``, read with the declared schema its
+    writer produces (no schema-inference job per batch)."""
+    return read_parquet(spark, os.path.join(root, f"s{version}"), schema=ddl)
+
+
+def _prior_state(
+    spark: SparkSession, root: str, batch_id: int, ddl: str
+) -> DataFrame | None:
+    """The redelivery anchor's state (``_latest_version_below``), or None
+    for the first batch."""
+    v = _latest_version_below(root, batch_id)
+    return None if v is None else _read_state(spark, root, v, ddl)
+
+
+def _final_state(spark: SparkSession, root: str, ddl: str) -> DataFrame | None:
+    """The newest committed state version, or None when no batch fired."""
+    versions = _state_versions(root)
+    return _read_state(spark, root, versions[-1], ddl) if versions else None
 
 
 def _vacuum_cdc_versions(root: str, keep: int) -> None:
@@ -1393,11 +1427,7 @@ def _vacuum_cdc_versions(root: str, keep: int) -> None:
     newest two versions by construction."""
     import shutil
 
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
+    versions = _state_versions(root)
     for v in versions[:-keep]:
         shutil.rmtree(os.path.join(root, f"s{v}"), ignore_errors=True)
 
@@ -1451,12 +1481,8 @@ def stream_cdc_apply(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         batch = _cdc_reduce(batch_df)
-        prior_v = _latest_version_below(root, batch_id)
-        if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}"))
-            merged = _cdc_merge(prior, batch)
-        else:
-            merged = batch
+        prior = _prior_state(spark, root, batch_id, _CDC_STATE_DDL)
+        merged = batch if prior is None else _cdc_merge(prior, batch)
         merged.write.mode("overwrite").parquet(os.path.join(root, f"s{batch_id}"))
         if keep_versions is not None:
             # retention AFTER the commit: the just-written version is the
@@ -1488,17 +1514,13 @@ def stream_cdc_apply(
 
         shutil.rmtree(ckpt, ignore_errors=True)
 
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
+    final = _final_state(spark, root, _CDC_STATE_DDL)
+    if final is None:
         return spark.createDataFrame(
             [], "user_id bigint, n_events bigint, last_ts_us bigint, "
                 "last_type string, last_value double",
         )
-    return spark.read.parquet(os.path.join(root, f"s{versions[-1]}")).select(
+    return final.select(
         "user_id", "n_events", "last_ts_us", "last_type", "last_value"
     )
 
@@ -1518,6 +1540,12 @@ FROM keyed GROUP BY user_id
 
 
 # --- B24: streaming incremental media near-dup --------------------------------
+
+#: schema of one side=pairs or side=codes dir of a media-dedup batch
+_MEDIA_BATCH_DDL = (
+    "doc_a BIGINT, doc_b BIGINT, hamming BIGINT, doc_id BIGINT, dhash BIGINT"
+)
+
 
 def stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-ingest PERCEPTUAL near-dup detection — B17's shape for
@@ -1572,7 +1600,9 @@ def stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             fresh = batch_codes
             if prior:
                 fresh = fresh.unionByName(
-                    spark.read.parquet(*prior).select("doc_id", "dhash")
+                    read_parquet(spark, *prior, schema=_MEDIA_BATCH_DDL).select(
+                        "doc_id", "dhash"
+                    )
                 )
             pairs = media_probe_pairs(
                 batch_codes, corpus_codes.unionByName(fresh)
@@ -1629,7 +1659,9 @@ def stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "doc_a bigint, doc_b bigint, hamming bigint"
         )
-    return spark.read.parquet(*dirs).select("doc_a", "doc_b", "hamming")
+    return read_parquet(spark, *dirs, schema=_MEDIA_BATCH_DDL).select(
+        "doc_a", "doc_b", "hamming"
+    )
 
 
 def _stream_media_dedup_sql() -> str:
@@ -1719,7 +1751,9 @@ def stream_cdc_versioned(
         ]
         batch = _cdc_reduce(batch_df)
         if prior_ids:
-            prior = read_versioned(spark, root, txns[f"b{max(prior_ids)}"])
+            prior = read_versioned(
+                spark, root, txns[f"b{max(prior_ids)}"], schema=_CDC_STATE_DDL
+            )
             merged = _cdc_merge(prior, batch)
         else:
             merged = batch
@@ -1762,7 +1796,7 @@ def stream_cdc_versioned(
             shutil.rmtree(ckpt, ignore_errors=True)
 
     try:
-        final = read_versioned(spark, root)
+        final = read_versioned(spark, root, schema=_CDC_STATE_DDL)
     except FileNotFoundError:
         return spark.createDataFrame(
             [], "user_id bigint, n_events bigint, last_ts_us bigint, "
@@ -1774,6 +1808,12 @@ def stream_cdc_versioned(
 
 
 # --- B17: streaming incremental near-dup detection ----------------------------
+
+#: schema of one side=pairs or side=bands dir of a dedup batch
+_DEDUP_BATCH_DDL = (
+    "doc_a BIGINT, doc_b BIGINT, doc_id BIGINT, band_id INT, band_hash BIGINT"
+)
+
 
 def stream_dedup_incremental(
     spark: SparkSession,
@@ -1881,7 +1921,7 @@ def stream_dedup_incremental(
             all_bands = corpus_bands.unionByName(batch_bands)
             if prior:
                 all_bands = all_bands.unionByName(
-                    spark.read.parquet(*prior).select(
+                    read_parquet(spark, *prior, schema=_DEDUP_BATCH_DDL).select(
                         "doc_id", "band_id", "band_hash"
                     )
                 )
@@ -1958,7 +1998,9 @@ def stream_dedup_incremental(
         return spark.createDataFrame(
             [], "doc_a bigint, doc_b bigint"
         )
-    return spark.read.parquet(*parts).select("doc_a", "doc_b")
+    return read_parquet(spark, *parts, schema=_DEDUP_BATCH_DDL).select(
+        "doc_a", "doc_b"
+    )
 
 
 # --- B25: late-data routing (watermark side-output) ---------------------------
@@ -1969,6 +2011,8 @@ LATE_DELAY_US = 7 * 24 * 3600 * 1_000_000
 
 #: batch count for the content-defined drop
 LATE_PARTS = 4
+#: schema of the routed rows root: rows/batch_id={id}/late={0,1}
+_LATE_ROWS_DDL = "event_id BIGINT, ts_us BIGINT, wm_us BIGINT, batch_id INT, late INT"
 
 
 def stream_late_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2120,7 +2164,7 @@ def stream_late_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
             "late_id_sum bigint, ontime_id_sum bigint, wm_us bigint, "
             "max_ts_us bigint",
         )
-    allrows = spark.read.parquet(rows_root)
+    allrows = read_parquet(spark, rows_root, schema=_LATE_ROWS_DDL)
     is_late = F.col("late") == 1
     return allrows.groupBy(F.col("batch_id").cast("bigint").alias("batch_id")).agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -2167,6 +2211,10 @@ GROUP BY batch_id
 
 # --- B29: streaming weighted sample (mergeable bottom-k state) ------------------
 
+#: schema of a weighted-sample state version (the bottom-K rows)
+_WSAMPLE_STATE_DDL = "doc_id BIGINT, weight BIGINT, priority BIGINT"
+
+
 def stream_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D78's weighted sample maintained over a stream (B29): bottom-k
     hash/weight priorities are MERGEABLE state — the bottom-K of a union
@@ -2206,12 +2254,8 @@ def stream_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(f"({prio}) div cast(n_chars as bigint)").alias("priority"),
             )
         )
-        prior_v = _latest_version_below(root, batch_id)
-        if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}"))
-            merged = _bottom_k(prior.unionByName(batch))
-        else:
-            merged = batch
+        prior = _prior_state(spark, root, batch_id, _WSAMPLE_STATE_DDL)
+        merged = batch if prior is None else _bottom_k(prior.unionByName(batch))
         merged.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(root, f"s{batch_id}")
         )
@@ -2238,22 +2282,18 @@ def stream_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         shutil.rmtree(ckpt, ignore_errors=True)
 
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
-        return spark.createDataFrame(
-            [], "doc_id bigint, weight bigint, priority bigint"
-        )
-    return spark.read.parquet(os.path.join(root, f"s{versions[-1]}"))
+    final = _final_state(spark, root, _WSAMPLE_STATE_DDL)
+    return spark.createDataFrame([], _WSAMPLE_STATE_DDL) if final is None else final
 
 
 # --- B28: streaming corpus-filter ingest gate -----------------------------------
 
 #: batch count for the corpus-filter drop
 CFILTER_PARTS = 4
+#: schema of one side=kept or side=seen dir of a corpus-filter batch
+_CFILTER_BATCH_DDL = (
+    "doc_id BIGINT, predicted_lang STRING, quality_score DOUBLE, th BIGINT"
+)
 
 
 def stream_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2334,7 +2374,9 @@ def stream_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 and os.path.isdir(os.path.join(rows_root, d, "side=seen"))
             ]
             if seen_dirs:
-                seen = spark.read.parquet(*seen_dirs).select("th")
+                seen = read_parquet(
+                    spark, *seen_dirs, schema=_CFILTER_BATCH_DDL
+                ).select("th")
                 firsts = firsts.join(seen, "th", "left_anti")
             stats = text_stats_frame(firsts).select("doc_id", "quality_score")
             langs = lang_id_frame(firsts).select("doc_id", "predicted_lang")
@@ -2407,7 +2449,7 @@ def stream_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "doc_id bigint, predicted_lang string, quality_score double"
         )
-    return spark.read.parquet(*parts).select(
+    return read_parquet(spark, *parts, schema=_CFILTER_BATCH_DDL).select(
         "doc_id", "predicted_lang", "quality_score"
     )
 
@@ -2439,6 +2481,10 @@ def _null_safe_add_merge(
         *[F.coalesce(f"_p_{k}", f"_b_{k}").alias(k) for k in keys],
         (F.coalesce("_pv", zero) + F.coalesce("_bv", zero)).alias(val),
     )
+
+
+#: schema of a k-anonymity state version: (QI group, count)
+_KANON_STATE_DDL = "event_type STRING, d TIMESTAMP, vb BIGINT, k BIGINT"
 
 
 def stream_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2482,9 +2528,8 @@ def stream_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         batch = _reduce(batch_df)
-        prior_v = _latest_version_below(root, batch_id)
-        if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}"))
+        prior = _prior_state(spark, root, batch_id, _KANON_STATE_DDL)
+        if prior is not None:
             merged = _null_safe_add_merge(
                 prior, batch, ["event_type", "d", "vb"], "k"
             )
@@ -2514,17 +2559,12 @@ def stream_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         shutil.rmtree(ckpt, ignore_errors=True)
 
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
+    state = _final_state(spark, root, _KANON_STATE_DDL)
+    if state is None:
         return spark.createDataFrame(
             [], "k_band string, n_groups bigint, n_rows bigint, "
                 "violates_policy boolean",
         )
-    state = spark.read.parquet(os.path.join(root, f"s{versions[-1]}"))
     band = (
         F.when(F.col("k") == 1, "1")
         .when(F.col("k") <= 4, "2-4")
@@ -2548,6 +2588,9 @@ def stream_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- B37: streaming l-diversity monitor (twin of the C68b audit) ---------------
+
+#: schema of an l-diversity state version: (QI, sensitive value) counts
+_LDIV_STATE_DDL = "d TIMESTAMP, vb BIGINT, event_type STRING, c BIGINT"
 
 
 def stream_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2588,9 +2631,8 @@ def stream_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         from frolyk_spark.operators.governance import qi_pairs
 
         batch = qi_pairs(batch_df)
-        prior_v = _latest_version_below(root, batch_id)
-        if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}"))
+        prior = _prior_state(spark, root, batch_id, _LDIV_STATE_DDL)
+        if prior is not None:
             merged = _null_safe_add_merge(
                 prior, batch, ["d", "vb", "event_type"], "c"
             )
@@ -2620,19 +2662,14 @@ def stream_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         shutil.rmtree(ckpt, ignore_errors=True)
 
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
+    state = _final_state(spark, root, _LDIV_STATE_DDL)
+    if state is None:
         return spark.createDataFrame(
             [], "l_band string, n_groups bigint, n_rows bigint, "
                 "violates_policy boolean",
         )
     from frolyk_spark.operators.governance import l_band_histogram
 
-    state = spark.read.parquet(os.path.join(root, f"s{versions[-1]}"))
     # the final view IS the batch audit's second level — one shared
     # definition (r15 review), so the oracle-sharing claim can't drift
     return l_band_histogram(state)
@@ -2642,6 +2679,11 @@ def stream_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: batch count for the token feed's content-defined document drop
 TOKFEED_PARTS = 4
+#: schema of the packed root: packed_offsets' rows under packed/batch_id={id}
+_TOKFEED_PACKED_DDL = (
+    "doc_id BIGINT, n_tokens BIGINT, start_offset BIGINT, seq_id BIGINT, "
+    "offset_in_seq BIGINT, batch_id INT"
+)
 
 
 def stream_token_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2803,7 +2845,7 @@ def stream_token_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "batch_id bigint, doc_id bigint, n_tokens bigint, "
             "start_offset bigint, seq_id bigint, offset_in_seq bigint",
         )
-    return spark.read.parquet(packed_root).select(
+    return read_parquet(spark, packed_root, schema=_TOKFEED_PACKED_DDL).select(
         F.col("batch_id").cast("bigint").alias("batch_id"),
         "doc_id",
         "n_tokens",
@@ -2842,6 +2884,12 @@ FROM c
 
 
 # --- B31: streaming Count-Min heavy hitters ---------------------------------------
+
+
+#: schema of a heavy-hitters state version: side=words rows + side=cells rows
+_HH_STATE_DDL = (
+    "side STRING, word STRING, cnt BIGINT, r INT, bucket BIGINT, tot BIGINT"
+)
 
 
 def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2913,9 +2961,8 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("r", "bucket")
             .agg(F.sum("cnt").cast("bigint").alias("tot"))
         )
-        prior_v = _latest_version_below(root, batch_id)
-        if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}"))
+        prior = _prior_state(spark, root, batch_id, _HH_STATE_DDL)
+        if prior is not None:
             pw = prior.where(F.col("side") == "words").select(
                 "word", F.col("cnt").alias("cnt_prior")
             )
@@ -2988,17 +3035,12 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         shutil.rmtree(ckpt, ignore_errors=True)
 
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
+    state = _final_state(spark, root, _HH_STATE_DDL)
+    if state is None:
         return spark.createDataFrame(
             [], "word string, est_count bigint, true_count bigint, "
                 "overcount bigint",
         )
-    state = spark.read.parquet(os.path.join(root, f"s{versions[-1]}"))
     wc = state.where(F.col("side") == "words").select("word", "cnt")
     cells = state.where(F.col("side") == "cells").select("r", "bucket", "tot")
     wb = wc.select(
@@ -3028,6 +3070,13 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- B32: streaming vocabulary-growth monitor -------------------------------------
+
+
+#: schema of a vocab-growth state version: side=words + side=slices rows
+_VGROWTH_STATE_DDL = (
+    "side STRING, word STRING, fd BIGINT, bucket BIGINT, n_docs_b BIGINT, "
+    "toks BIGINT"
+)
 
 
 def stream_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3087,9 +3136,8 @@ def stream_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_toks").cast("bigint").alias("toks"),
             )
         )
-        prior_v = _latest_version_below(root, batch_id)
-        if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}"))
+        prior = _prior_state(spark, root, batch_id, _VGROWTH_STATE_DDL)
+        if prior is not None:
             pw = prior.where(F.col("side") == "words").select(
                 "word", F.col("fd").alias("fd_prior")
             )
@@ -3164,17 +3212,12 @@ def stream_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         shutil.rmtree(ckpt, ignore_errors=True)
 
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
+    state = _final_state(spark, root, _VGROWTH_STATE_DDL)
+    if state is None:
         return spark.createDataFrame(
             [], "bucket bigint, n_docs_b bigint, new_words bigint, "
                 "cum_tokens bigint, cum_vocab bigint",
         )
-    state = spark.read.parquet(os.path.join(root, f"s{versions[-1]}"))
     fb = (
         state.where(F.col("side") == "words")
         .select(F.expr(bucket_expr.replace("doc_id", "fd")).alias("bucket"))
@@ -3212,6 +3255,8 @@ def stream_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: batch count for the as-of drop
 ASOF_STREAM_PARTS = 4
+#: schema of one side=out or side=state dir of an as-of batch
+_ASOF_BATCH_DDL = "event_id BIGINT, user_id BIGINT, ts_us BIGINT, last_click_us BIGINT"
 
 
 def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3287,8 +3332,10 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 and os.path.isdir(os.path.join(rows_root, d, "side=state"))
             ]
             if prior:
-                state = spark.read.parquet(
-                    os.path.join(rows_root, f"b{max(prior)}", "side=state")
+                state = read_parquet(
+                    spark,
+                    os.path.join(rows_root, f"b{max(prior)}", "side=state"),
+                    schema=_ASOF_BATCH_DDL,
                 ).select("user_id", F.col("last_click_us").alias("st_click_us"))
             else:
                 state = spark.createDataFrame(
@@ -3378,12 +3425,14 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "event_id bigint, user_id bigint, ts_us bigint, last_click_us bigint"
         )
-    return spark.read.parquet(*parts).select(
-        "event_id", "user_id", "ts_us", "last_click_us"
-    )
+    return read_parquet(spark, *parts, schema=_ASOF_BATCH_DDL)
 
 
 # --- B35: streaming histogram quantile monitor --------------------------------
+
+
+#: schema of a quantile-sketch state version: one count per bin
+_QSKETCH_STATE_DDL = "bin BIGINT, cnt BIGINT"
 
 
 def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3426,7 +3475,7 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # fixed bin geometry, derived once from the staged drop (the E10
     # stats read a production deployment would use) — never per batch
-    geo = spark.read.parquet(stage).agg(
+    geo = read_parquet(spark, stage, schema=o.schema).agg(
         F.min("cents").alias("lo"), F.max("cents").alias("hi")
     ).collect()[0]
     lo, hi = geo.lo, geo.hi
@@ -3441,11 +3490,9 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("bin")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         )
-        prior_v = _latest_version_below(root, batch_id)
-        if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}")).select(
-                "bin", F.col("cnt").alias("c0")
-            )
+        prior = _prior_state(spark, root, batch_id, _QSKETCH_STATE_DDL)
+        if prior is not None:
+            prior = prior.select("bin", F.col("cnt").alias("c0"))
             zero = F.lit(0).cast("bigint")
             bins = prior.join(bins, "bin", "full_outer").select(
                 "bin",
@@ -3475,18 +3522,13 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         shutil.rmtree(ckpt, ignore_errors=True)
 
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
+    final_bins = _final_state(spark, root, _QSKETCH_STATE_DDL)
+    if final_bins is None:
         return spark.createDataFrame(
             [],
             "decile bigint, target_rank bigint, est_cents bigint, "
             "exact_cents bigint, err_cents bigint",
         )
-    final_bins = spark.read.parquet(os.path.join(root, f"s{versions[-1]}"))
     # count conservation: the merged state must account for every source
     # row before anything is estimated from it
     n_state = final_bins.agg(F.sum("cnt")).collect()[0][0]
@@ -3520,6 +3562,9 @@ EDGE_COMPACT_EVERY = 2
 #: (write_bucketed docstring): target total_size / desired_partition
 #: at the deployed scale; small here because the test SFs are small
 EDGE_STORE_BUCKETS = 8
+
+#: schema of one side=edges or side=degrees dir of an edge-monitor batch
+_EDGE_BATCH_DDL = "src BIGINT, dst BIGINT, part BIGINT, degree BIGINT"
 
 
 def stream_edge_degrees(
@@ -3643,12 +3688,11 @@ def stream_edge_degrees(
             )
             prior_v = _latest_version_below_dir(rows_root, batch_id)
             if prior_v is not None:
-                prior_deg = (
-                    spark.read.parquet(
-                        os.path.join(rows_root, f"b{prior_v}", "side=degrees")
-                    )
-                    .select("part", F.col("degree").alias("d0"))
-                )
+                prior_deg = read_parquet(
+                    spark,
+                    os.path.join(rows_root, f"b{prior_v}", "side=degrees"),
+                    schema=_EDGE_BATCH_DDL,
+                ).select("part", F.col("degree").alias("d0"))
                 zero = F.lit(0).cast("bigint")
                 deltas = prior_deg.join(deltas, "part", "full_outer").select(
                     "part",
@@ -3717,8 +3761,10 @@ def stream_edge_degrees(
     if not versions:
         return spark.createDataFrame([], "part_key bigint, degree bigint")
     return (
-        spark.read.parquet(
-            os.path.join(rows_root, f"b{versions[-1]}", "side=degrees")
+        read_parquet(
+            spark,
+            os.path.join(rows_root, f"b{versions[-1]}", "side=degrees"),
+            schema=_EDGE_BATCH_DDL,
         )
         .select(
             F.col("part").cast("bigint").alias("part_key"),
@@ -3857,7 +3903,7 @@ def compact_edge_store(
             prev_through = int(fh.read().strip())
     versioned = f"{table_name}_t{through_batch}"
     store = write_bucketed(
-        spark.read.parquet(*dirs).select("src", "dst"),
+        read_parquet(spark, *dirs, schema=_EDGE_BATCH_DDL).select("src", "dst"),
         versioned,
         ["src", "dst"],
         buckets=buckets,
@@ -3923,7 +3969,9 @@ def _edge_store_parts(
         else None
     )
     delta_df = (
-        spark.read.parquet(*deltas).select("src", "dst") if deltas else None
+        read_parquet(spark, *deltas, schema=_EDGE_BATCH_DDL).select("src", "dst")
+        if deltas
+        else None
     )
     return store, delta_df
 
@@ -3975,6 +4023,10 @@ FROM e GROUP BY src ORDER BY part_key
 
 
 # --- B36: incremental connected components (streaming twin of C71) ------------
+
+
+#: schema of a components state version: one label per part
+_COMPONENTS_STATE_DDL = "part BIGINT, label BIGINT"
 
 
 def stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4093,7 +4145,7 @@ def stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         prior_v = _latest_version_below(root, batch_id)
         prior_conv = True
         if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}"))
+            prior = _read_state(spark, root, prior_v, _COMPONENTS_STATE_DDL)
             with open(_conv_path(prior_v)) as fh:
                 prior_conv = fh.read().strip() == "1"
             # label(x) = stored label, or x itself for first-seen parts —
@@ -4173,18 +4225,14 @@ def stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         shutil.rmtree(ckpt, ignore_errors=True)
 
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
+    versions = _state_versions(root)
     if not versions:
         return spark.createDataFrame(
             [],
             "part_key bigint, component_id bigint, is_canonical boolean, "
             "component_size bigint, converged boolean",
         )
-    final = spark.read.parquet(os.path.join(root, f"s{versions[-1]}"))
+    final = _read_state(spark, root, versions[-1], _COMPONENTS_STATE_DDL)
     with open(_conv_path(versions[-1])) as fh:
         converged = fh.read().strip() == "1"
     sizes = final.groupBy("label").agg(
@@ -4204,6 +4252,10 @@ def stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- B33: streaming corpus length monitor (mergeable histogram state) --------
+
+
+#: schema of a length-histogram state version
+_LENHIST_STATE_DDL = "source STRING, len_bucket BIGINT, n_docs BIGINT, n_tokens BIGINT"
 
 
 def stream_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4246,9 +4298,9 @@ def stream_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_tokens").cast("bigint").alias("n_tokens"),
             )
         )
-        prior_v = _latest_version_below(root, batch_id)
-        if prior_v is not None:
-            prior = spark.read.parquet(os.path.join(root, f"s{prior_v}")).select(
+        prior = _prior_state(spark, root, batch_id, _LENHIST_STATE_DDL)
+        if prior is not None:
+            prior = prior.select(
                 "source",
                 "len_bucket",
                 F.col("n_docs").alias("d0"),
@@ -4285,18 +4337,8 @@ def stream_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         shutil.rmtree(ckpt, ignore_errors=True)
 
-    versions = sorted(
-        int(d[1:])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("s") and d[1:].isdigit()
-    )
-    if not versions:
-        return spark.createDataFrame(
-            [], "source string, len_bucket bigint, n_docs bigint, n_tokens bigint"
-        )
-    return spark.read.parquet(os.path.join(root, f"s{versions[-1]}")).select(
-        "source", "len_bucket", "n_docs", "n_tokens"
-    )
+    final = _final_state(spark, root, _LENHIST_STATE_DDL)
+    return spark.createDataFrame([], _LENHIST_STATE_DDL) if final is None else final
 
 
 from frolyk_spark.operators.governance import K_ANONYMITY_SQL as _K_ANON_ORACLE

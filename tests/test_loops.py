@@ -18,7 +18,7 @@ from frolyk_spark.plans.inspect import plan_report
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-def test_loop_partitions_core_floor_and_bytes_term(spark):
+def test_loop_partitions_core_floor(spark):
     """Concrete literal expectations (r15 ADVICE: the old form restated
     the implementation formula verbatim and could only catch a crash)."""
     cores = spark.sparkContext.defaultParallelism
@@ -29,22 +29,38 @@ def test_loop_partitions_core_floor_and_bytes_term(spark):
         spark.conf.set("spark.sql.shuffle.partitions", "3")
         # small state: the session setting (3) undercuts the core floor
         assert loop_partitions(spark, 0) == 3
-        # bytes term dominates once the artifact crosses its multiples
-        assert loop_partitions(spark, 5 * LOOP_PARTITION_BYTES) == 5
-        assert loop_partitions(spark, 5 * LOOP_PARTITION_BYTES - 1) == 4
-        assert loop_partitions(spark, 1000 * LOOP_PARTITION_BYTES) == 1000
         # below one unit the floor holds
         assert loop_partitions(spark, LOOP_PARTITION_BYTES - 1) == 3
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def test_loop_partitions_bytes_term(spark):
+    """The bytes term dominates once the artifact crosses its multiples;
+    with the session at 3 the core floor is at most 3, so these hold on
+    any core count."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        assert loop_partitions(spark, 5 * LOOP_PARTITION_BYTES) == 5
+        assert loop_partitions(spark, 5 * LOOP_PARTITION_BYTES - 1) == 4
+        assert loop_partitions(spark, 1000 * LOOP_PARTITION_BYTES) == 1000
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def test_loop_partitions_respects_lowered_session_setting(spark):
-    # a streaming foreachBatch body that pinned partitions=4 must keep 4
+    # a streaming foreachBatch body that pinned partitions=4 must never
+    # exceed 4; below 8 cores the cores // 2 floor undercuts it
+    cores = spark.sparkContext.defaultParallelism
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        assert loop_partitions(spark, 0) == 4
+        got = loop_partitions(spark, 0)
+        assert got <= 4
+        assert got == min(4, max(1, cores // 2))
+        if cores >= 8:
+            assert got == 4
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
@@ -72,6 +88,14 @@ def test_min_label_propagation_honors_big_bytes(spark):
     assert labels.rdd.getNumPartitions() == want
     got = {r.doc_id: r.label for r in labels.collect()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+def test_min_label_propagation_rejects_zero_iters(spark):
+    from frolyk_spark.operators.dedup import min_label_propagation
+
+    pairs = spark.createDataFrame([(1, 2)], "doc_a bigint, doc_b bigint")
+    with pytest.raises(ValueError, match="max_iters"):
+        min_label_propagation(pairs, 0)
 
 
 def test_dedup_clusters_sizes_loop_from_signature_artifact(spark, sf_dir, monkeypatch):

@@ -236,3 +236,74 @@ def test_sample_weighted_plan_and_bias(spark, sf_dir):
         docs.where(docs.doc_id.isin(list(a))).agg({"n_chars": "avg"}).collect()[0][0]
     )
     assert sample_mean > corpus_mean
+
+
+# --- catalog.read_parquet: no schema-inference job for a known schema --------
+
+def _next_job(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_repeat_load_table_launches_no_job(spark, sf_dir):
+    from frolyk_spark.sources.catalog import load_table
+
+    load_table(spark, sf_dir, "orders")
+    j0 = _next_job(spark)
+    df = load_table(spark, sf_dir, "orders")
+    assert _next_job(spark) - j0 == 0
+    assert "o_orderkey" in df.columns
+
+
+def test_read_parquet_reinfers_on_rewrite_and_conf_flip(spark, tmp_path):
+    from frolyk_spark.sources.catalog import read_parquet
+
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a")], "k bigint, v string").write.parquet(path)
+    # a declared schema never infers
+    j0 = _next_job(spark)
+    df = read_parquet(spark, path, schema="k bigint, v string")
+    assert _next_job(spark) - j0 == 0
+    assert [tuple(r) for r in df.collect()] == [(1, "a")]
+    j0 = _next_job(spark)
+    assert read_parquet(spark, path).columns == ["k", "v"]
+    assert _next_job(spark) - j0 == 1
+    j0 = _next_job(spark)
+    read_parquet(spark, path)
+    assert _next_job(spark) - j0 == 0
+
+    # a rewritten table infers again and sees its new schema
+    spark.createDataFrame([(1, "a", 2.0)], "k bigint, v string, w double").write.mode(
+        "overwrite"
+    ).parquet(path)
+    j0 = _next_job(spark)
+    df = read_parquet(spark, path)
+    assert _next_job(spark) - j0 == 1
+    assert df.columns == ["k", "v", "w"]
+    assert df.collect()[0].w == 2.0
+
+    # an inference conf is part of the key: flipping it infers again,
+    # flipping it back hits the schema inferred under the old value
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "false" if prev == "true" else "true")
+        j0 = _next_job(spark)
+        read_parquet(spark, path)
+        assert _next_job(spark) - j0 == 1
+    finally:
+        spark.conf.set(conf, prev)
+    j0 = _next_job(spark)
+    read_parquet(spark, path)
+    assert _next_job(spark) - j0 == 0
+
+
+def test_read_parquet_missing_path_raises_spark_error(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    from frolyk_spark.sources.catalog import read_parquet
+
+    missing = str(tmp_path / "missing")
+    with pytest.raises(AnalysisException):
+        read_parquet(spark, missing)
+    with pytest.raises(AnalysisException):
+        read_parquet(spark, missing, schema="k bigint")

@@ -2064,3 +2064,27 @@ def test_sweep_dead_edge_stores_reclaims_warehouse_dirs(spark):
         assert not _os.path.isdir(dead_dir)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {live}")
+
+
+#: (rows, xxhash64) at sf0.001 from before stream result and state reads
+#: declared their schemas: reading with the declared schema must not
+#: change a single output bit
+_DECLARED_SCHEMA_GOLDENS = {
+    "stream_tumbling": (868, 6811902298881780179),  # run_available_now
+    "stream_quantile_sketch": (9, 8774719471723237621),  # versioned state
+}
+
+
+@pytest.mark.parametrize("key", sorted(_DECLARED_SCHEMA_GOLDENS))
+def test_declared_schema_reads_keep_outputs(spark, sf_dir, key):
+    from frolyk_spark.streaming import jobs
+
+    if os.path.basename(os.path.normpath(sf_dir)) != "sf0.001":
+        pytest.skip("goldens are for the sf0.001 test set")
+    df = getattr(jobs, key)(spark, sf_dir)
+    row = (
+        df.select(F.xxhash64(F.struct(*[F.col(c) for c in df.columns])).alias("h"))
+        .agg(F.count(F.lit(1)).alias("n"), F.expr("bit_xor(h)").alias("chk"))
+        .collect()[0]
+    )
+    assert (row.n, row.chk) == _DECLARED_SCHEMA_GOLDENS[key]
